@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import table
+from ..catalog import shared_artifact, table
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -248,20 +248,13 @@ def lsh_candidate_pairs(bands: DataFrame) -> DataFrame:
     )
 
 
-# Session-scoped MinHash-LSH candidate-pair cache, keyed by
-# (applicationId, realpath(sf_dir), k, band_rows) — the
-# graph._EDGE_CACHE pattern (r7 advisor hygiene: realpath-normalized,
-# stale-application entries evicted on every lookup).
-_PAIRS_CACHE: dict[tuple[str, str, int, int], DataFrame] = {}
-
-
 def lsh_pairs_cached(
     spark: SparkSession, sf_dir: str, k: int = 12, band_rows: int = 3
 ) -> DataFrame:
     """The MinHash(k)+LSH(band_rows) candidate pairs over
-    ``aug_docs``, materialized ONCE per (session, sf_dir, params) as
-    an eager localCheckpoint and shared by every downstream consumer
-    (components, components-star, the dedup-QA trio, exact rescores).
+    ``aug_docs``, a ``catalog.shared_artifact`` shared by every
+    downstream consumer (components, components-star, the dedup-QA
+    trio, exact rescores).
 
     VERDICT r8 task 4: the dedup-QA trio (`q_dup_cluster_sizes`,
     `q_dup_flow_matrix`, `q_lsh_dedup_eval`) each rebuilt the identical
@@ -269,27 +262,16 @@ def lsh_pairs_cached(
     stages are ~6.3 s (banding 3.5 s, pair join 2.8 s) of each query's
     cost, so a trio run paid ~3× for one candidate set. The corpus-QA
     reality is exactly this shape: one candidate generation, many
-    readouts. On a cluster the checkpoint is a bucketed parquet table;
-    determinism of the md5-derived MinHash makes the cache a pure
-    optimization — every oracle recomputes the same set in SQL.
-    Checkpoint blocks of evicted (dead-session) entries are
-    unpersisted, mirroring graph._EDGE_CACHE."""
-    import os
-
-    app_id = spark.sparkContext.applicationId
-    for stale in [kk for kk in _PAIRS_CACHE if kk[0] != app_id]:
-        try:
-            _PAIRS_CACHE.pop(stale).unpersist()
-        except Exception:
-            pass  # dead JVM handle — dropping the reference is enough
-    key = (app_id, os.path.realpath(str(sf_dir)), k, band_rows)
-    cached = _PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    pairs = lsh_candidate_pairs(
-        minhash_bands(aug_docs(spark, sf_dir), k=k, band_rows=band_rows)
-    ).localCheckpoint(eager=True)
-    return _PAIRS_CACHE.setdefault(key, pairs)
+    readouts. Determinism of the md5-derived MinHash makes the cache a
+    pure optimization — every oracle recomputes the same set in SQL."""
+    return shared_artifact(
+        spark,
+        sf_dir,
+        ("lsh_pairs", k, band_rows),
+        lambda: lsh_candidate_pairs(
+            minhash_bands(aug_docs(spark, sf_dir), k=k, band_rows=band_rows)
+        ),
+    )
 
 
 def jaccard_verify(

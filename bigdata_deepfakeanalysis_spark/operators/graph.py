@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import shared_artifact, table
 from ..registry import query
 
 _SCALE = 1 << 20
@@ -175,11 +175,6 @@ def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TRI_EDGES = 200  # top edges kept by (shared-customer count, s1, s2)
 
-# Per-(SparkSession, SF) cache of the shared sparsified graph. Keyed by
-# applicationId so a dead session's checkpointed partitions are never
-# handed to a new one.
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 def copurchase_top_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared graph every algorithm below runs on: supplier
@@ -187,61 +182,41 @@ def copurchase_top_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-{_TRI_EDGES} heaviest by shared-customer count with fully
     deterministic ties (cnt DESC, s1, s2) — columns (s1 < s2, cnt).
 
-    Built ONCE per (session, SF) and ``localCheckpoint``-pinned, then
-    reused by all nine graph operators (r6: each previously rebuilt the
-    identical edge set, and the build — a per-customer supplier
-    self-join — dominated every graph query's wall time, ~2.9 s of
-    q_lpa_communities' 4.0 s at sf0.1). At 100 TB this is exactly how
-    a graph workload runs: materialize the edge list once (here the
-    pinned checkpoint; on a cluster a parquet/bucketed table), then
-    amortize it across algorithms. Determinism of the full tie-break
-    makes the cache a pure optimization — every oracle recomputes the
-    same set in SQL.
+    A ``catalog.shared_artifact`` reused by all nine graph operators
+    (r6: each previously rebuilt the identical edge set, and the build
+    — a per-customer supplier self-join — dominated every graph query's
+    wall time, ~2.9 s of q_lpa_communities' 4.0 s at sf0.1). At 100 TB
+    this is exactly how a graph workload runs: materialize the edge
+    list once, then amortize it across algorithms. Determinism of the
+    full tie-break makes the cache a pure optimization — every oracle
+    recomputes the same set in SQL."""
 
-    Cache hygiene (r7, advisor finding): the sf_dir key is
-    realpath-normalized so relative/absolute spellings of the same
-    directory share one entry, and on every lookup entries whose
-    applicationId no longer matches the live session are evicted
-    (unpersisting their pinned checkpoint blocks) — a module-global
-    with no eviction would otherwise pin dead sessions' partitions for
-    process lifetime."""
-    import os
-
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _EDGE_CACHE if k[0] != app_id]:
-        try:
-            _EDGE_CACHE.pop(stale).unpersist()
-        except Exception:
-            pass  # dead JVM handle — dropping the reference is enough
-    key = (app_id, os.path.realpath(str(sf_dir)))
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    cs = (
-        li.select("l_orderkey", "l_suppkey")
-        .join(
-            o.select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
+    def build() -> DataFrame:
+        li = table(spark, sf_dir, "lineitem")
+        o = table(spark, sf_dir, "orders")
+        cs = (
+            li.select("l_orderkey", "l_suppkey")
+            .join(
+                o.select("o_orderkey", "o_custkey"),
+                F.col("l_orderkey") == F.col("o_orderkey"),
+            )
+            .select(
+                F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
+            )
+            .distinct()
         )
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    a = cs.select("c", F.col("s").alias("s1"))
-    b = cs.select("c", F.col("s").alias("s2"))
-    top_e = (
-        a.join(b, "c")
-        .where(F.col("s1") < F.col("s2"))
-        .groupBy("s1", "s2")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), "s1", "s2")
-        .limit(_TRI_EDGES)
-        .localCheckpoint(eager=True)
-    )
-    # setdefault: if a concurrent first call raced us here, keep the
-    # winner and let our duplicate build be garbage-collected.
-    return _EDGE_CACHE.setdefault(key, top_e)
+        a = cs.select("c", F.col("s").alias("s1"))
+        b = cs.select("c", F.col("s").alias("s2"))
+        return (
+            a.join(b, "c")
+            .where(F.col("s1") < F.col("s2"))
+            .groupBy("s1", "s2")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .orderBy(F.desc("cnt"), "s1", "s2")
+            .limit(_TRI_EDGES)
+        )
+
+    return shared_artifact(spark, sf_dir, "copurchase_top_edges", build)
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:

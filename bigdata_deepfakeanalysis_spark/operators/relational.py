@@ -5158,7 +5158,7 @@ def q_topk_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mergeable-partials contract q_moment_merge pins). The gid=1
     # (yr, pk) grain is not built at all: the declared filter discards
     # it and it ranks in its own window partitions, so omitting it is
-    # row-identical (re-asserted by tools/ab_topk_preagg.py: 352 rows
+    # row-identical (re-asserted by the OPTIMIZATION_r13.md A/B: 352 rows
     # byte-equal; interleaved A/B 2.16-2.73 -> 1.88-2.41 s). The
     # oracle keeps the declared GROUPING SETS form.
     fine = base.groupBy("yr", "nk", "pk").agg(

@@ -1,14 +1,15 @@
 #!/usr/bin/env python
-"""Interleaved timing harness for named registry queries — the
-generic form of tools/ab_semantic_dedup_lsh.py, for adjudicating
-cross-round bench moves (the r6/r7/r8 verdicts each needed one).
+"""Interleaved timing harness for named registry queries, for
+adjudicating cross-round bench moves (the r6/r7/r8 verdicts each
+needed one).
 
 Usage:
     python tools/time_queries.py q_name [q_name ...]
         [--sf-dir DIR | --sf1] [--runs 3]
         [--ab key=value]          # arm B sets this conf, arm A unsets
 
-One tuned local[32] session, warm page cache (one count() per input
+One tuned session from session.get_spark (honours SPARK_GRAFT_CPUS
+and SPARK_GRAFT_DRIVER_MEM), warm page cache (one count() per input
 table), one discarded warmup run per query, then `--runs` timed runs
 (interleaved A/B when --ab is given — only interleaved numbers are
 comparable; absolute times swing 2-5x with host load). Prints one JSON
@@ -22,14 +23,6 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-from pyspark.sql import SparkSession
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
-
 
 def main() -> int:
     names: list = []
@@ -56,18 +49,13 @@ def main() -> int:
         else:
             names.append(a)
 
-    from bigdata_deepfakeanalysis_spark.session import tune
-    from bigdata_deepfakeanalysis_spark.registry import all_queries
-    from bigdata_deepfakeanalysis_spark.catalog import table
+    from pyspark.errors import AnalysisException
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    tune(spark)
+    from bigdata_deepfakeanalysis_spark.session import get_spark
+    from bigdata_deepfakeanalysis_spark.registry import all_queries
+    from bigdata_deepfakeanalysis_spark.catalog import TABLES, table
+
+    spark = get_spark("time_queries")
     qs = all_queries()
     unknown = [n for n in names if n not in qs]
     if unknown:
@@ -77,7 +65,7 @@ def main() -> int:
     for t in TABLES:
         try:  # staged dirs may hold only the tables their queries read
             table(spark, sf_dir, t).count()
-        except Exception:
+        except AnalysisException:
             pass
 
     def run_once(name: str) -> float:
